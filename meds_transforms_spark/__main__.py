@@ -29,12 +29,9 @@ def _cmd_run(args) -> int:
     src = MEDSDataset(spark, args.input)
     dst = MEDSDataset(spark, args.output)
 
+    # No train_data(): Pipeline.run slices train rows from the split
+    # column or subject_splits, the only sources train_data() has too.
     data = src.data()
-    train = None
-    try:
-        train = src.train_data()
-    except FileNotFoundError:
-        pass
     pipe = Pipeline(
         spark,
         cfg,
@@ -46,7 +43,6 @@ def _cmd_run(args) -> int:
     out_data, out_meta = pipe.run(
         data,
         code_metadata=src.code_metadata(),
-        train_data=train,
         subject_splits=splits,
     )
     dst.write_data(canonical_sort(out_data))

@@ -51,9 +51,12 @@ def fit_vocabulary_indices(
     max_rows: int | None = 5_000_000,
 ) -> DataFrame:
     """``validate=False`` skips the uniqueness check — it is an eager
-    action that forces an extra computation of the metadata lineage;
-    callers that just aggregated by exactly these keys already have
-    uniqueness by construction.
+    action over ``code_metadata``. On a bare lazy frame it forces an
+    extra computation of the metadata lineage; inside ``Pipeline.run``
+    the codes table is pinned at its stage boundary, so the check reads
+    (and materializes) that pin, which the later data and codes writes
+    then reuse. Callers that just aggregated by exactly these keys
+    already have uniqueness by construction.
 
     Vocab indices are a total order over the code dimension table —
     small by contract (it is broadcast downstream by normalization),

@@ -149,7 +149,28 @@ class PipelineConfig:
 
 
 class Pipeline:
-    """Execute a stage list over a MEDS dataset (or bare DataFrames)."""
+    """Execute a stage list over a MEDS dataset (or bare DataFrames).
+
+    Stage boundaries. With ``checkpoint_dir`` every stage's output is
+    written to parquet and read back, as the reference does. Without
+    it the stages compose into one lazy plan, and a boundary whose
+    output has more than one consumer is pinned with a lazy
+    ``localCheckpoint`` so each stage executes once across the actions
+    that read it (:func:`_shared_boundaries`, decided from the stage
+    list alone):
+
+    (a) every metadata stage's codes table — read by the broadcast
+        joins of later data stages, the next metadata stage and the
+        caller's codes write;
+    (b) a data stage's output that a later metadata stage reads
+        through the train slice before the next data stage replaces it
+        (``fit_vocabulary_indices`` reads the codes table, not the
+        data, so it does not count).
+
+    Pin blocks live on the executors that computed them and are not
+    replicated: losing an executor fails the action that needs them.
+    On clusters that lose executors, set ``checkpoint_dir``.
+    """
 
     def __init__(
         self,
@@ -172,8 +193,10 @@ class Pipeline:
         #: files, resumed}]``. Row/byte counts come from the committed
         #: checkpoint's parquet FOOTERS (pure metadata reads — no extra
         #: Spark job, no second scan), so at 100 TB the metrics are
-        #: free; without checkpointing nothing is counted (counting
-        #: would force an extra action per stage) and this stays [].
+        #: free. Without checkpoint_dir the shared boundaries are lazy
+        #: pins (unreplicated executor blocks, see the class docstring)
+        #: that have no files to read; counting them would force an
+        #: extra action per stage, so this stays [].
         self.last_run_metrics: list[dict] = []
 
     def run(
@@ -200,6 +223,7 @@ class Pipeline:
         import inspect
 
         self.last_run_metrics = []
+        shared = _shared_boundaries(self.config.stages)
 
         def train_slice(df: DataFrame) -> DataFrame:
             if "split" in df.columns:
@@ -259,7 +283,7 @@ class Pipeline:
                     else join_and_replace(new_meta, code_metadata, keys)
                 )
                 code_metadata = self._checkpoint(
-                    code_metadata, i, spec.name, is_metadata=True
+                    code_metadata, i, spec.name, is_metadata=True, shared=i in shared
                 )
             else:
                 if spec.match_revise:
@@ -271,14 +295,18 @@ class Pipeline:
                     )
                 else:
                     data = stage(data, **cfg)
-                data = self._checkpoint(data, i, spec.name, is_metadata=False)
+                data = self._checkpoint(
+                    data, i, spec.name, is_metadata=False, shared=i in shared
+                )
         return data, code_metadata
 
     def _checkpoint(
-        self, df: DataFrame, idx: int, name: str, is_metadata: bool
+        self, df: DataFrame, idx: int, name: str, is_metadata: bool, shared: bool
     ) -> DataFrame:
+        """The stage boundary: parquet with ``checkpoint_dir``, else a
+        lazy pin when ``shared`` (see the class docstring), else ``df``."""
         if not self.checkpoint_dir:
-            return df
+            return df.localCheckpoint(eager=False) if shared else df
         path = os.path.join(self.checkpoint_dir, f"{idx:02d}_{name}")
         write_parquet(df, path)
         self._record_metrics(path, idx, name, is_metadata, False)
@@ -319,6 +347,23 @@ class Pipeline:
             return None
         path = os.path.join(self.checkpoint_dir, f"{idx:02d}_{name}")
         return path if os.path.exists(os.path.join(path, "_SUCCESS")) else None
+
+
+def _shared_boundaries(stages: list[StageSpec]) -> set[int]:
+    """Indices of the stages whose output has more than one consumer
+    in a lazy :meth:`Pipeline.run`: every metadata stage (its codes
+    table), and the data stage that a later train-slice-reading
+    metadata stage follows before the next data stage runs."""
+    shared: set[int] = set()
+    last_data = None
+    for i, spec in enumerate(stages):
+        if not get_stage(spec.resolved_name).is_metadata:
+            last_data = i
+            continue
+        shared.add(i)
+        if spec.resolved_name != "fit_vocabulary_indices" and last_data is not None:
+            shared.add(last_data)
+    return shared
 
 
 def canonical_sort(df: DataFrame, global_order: bool = False) -> DataFrame:

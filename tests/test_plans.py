@@ -206,3 +206,145 @@ def test_q15_q11_single_fact_scan(spark):
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert plan.count("lineitem.parquet") <= 1, name
         assert df.count() >= 1, name
+
+
+NORMALIZE_YAML = "pkg://meds_transforms_spark.pipelines.normalize.yaml"
+
+
+def plan_leaves(df) -> list[tuple[str, str]]:
+    """(node class, node string) of every leaf of the optimized logical plan."""
+    leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
+    return [
+        (leaves.apply(i).getClass().getSimpleName(), leaves.apply(i).toString())
+        for i in range(leaves.size())
+    ]
+
+
+def _write_normalize_input(spark, root, split_column: bool):
+    """A MEDS dataset for normalize.yaml under ``root``: 40 subjects
+    (3 in 4 train), 1-5 timed events each plus one static row, one HR
+    outlier far past 4 sigma. Values are multiples of 0.5, so every
+    float sum is exact and results cannot depend on summation order.
+    The split is a ``split=`` partition column, or with
+    ``split_column=False`` a ``subject_splits`` file. Returns the
+    opened ``(data, subject_splits)``."""
+    import datetime as dt
+
+    from meds_transforms_spark.schema import MEDS_DATA_SCHEMA
+    from meds_transforms_spark.sources.meds_dataset import MEDSDataset
+
+    rows, splits = [], []
+    for s in range(1, 41):
+        splits.append((s, "train" if s % 4 else "held_out"))
+        rows.append((s, None, f"EYE_COLOR//{s % 3}", None, None))
+        for e in range(1 + s % 5):
+            t = dt.datetime(2020, 1, 1) + dt.timedelta(days=s, hours=e)
+            hr = 1000.0 if (s, e) == (3, 0) else 60.0 + ((s * 7 + e * 3) % 80) / 2
+            rows.append((s, t, "HR", hr, None))
+            rows.append((s, t, f"LAB//{e % 3}", float((s + e) % 9) / 2, None))
+    data = spark.createDataFrame(rows, MEDS_DATA_SCHEMA)
+    split_df = spark.createDataFrame(splits, "subject_id long, split string")
+    ds = MEDSDataset(spark, str(root))
+    if split_column:
+        ds.write_data(data.join(split_df, "subject_id"))
+        return ds.data(), None
+    ds.write_data(data)
+    ds.write_subject_splits(split_df)
+    return ds.data(), ds.subject_splits()
+
+
+def test_lazy_pipeline_pins_shared_boundaries(spark, tmp_path):
+    """Without checkpoint_dir, Pipeline.run pins the shared stage
+    boundaries: the returned data and codes frames read only pinned
+    RDDs, never the input files again (each write would otherwise
+    re-run filter_subjects and the train-split aggregate). With
+    checkpoint_dir, they read only the checkpoint parquet."""
+    from meds_transforms_spark.plans import Pipeline, PipelineConfig
+
+    data, _ = _write_normalize_input(spark, tmp_path / "in", split_column=True)
+    cfg = PipelineConfig.from_yaml(NORMALIZE_YAML)
+
+    out, meta = Pipeline(spark, cfg).run(data)
+    for df in (out, meta):
+        leaves = plan_leaves(df)
+        assert leaves and {cls for cls, _ in leaves} == {"LogicalRDD"}, leaves
+
+    ckpt = str(tmp_path / "ckpt")
+    out, meta = Pipeline(spark, cfg, checkpoint_dir=ckpt).run(data)
+    for df in (out, meta):
+        leaves = plan_leaves(df)
+        assert leaves and {cls for cls, _ in leaves} == {"LogicalRelation"}, leaves
+        assert all(ckpt in f for f in df.inputFiles()), df.inputFiles()
+
+
+@pytest.mark.parametrize("split_column", [True, False], ids=["split_col", "subject_splits"])
+@pytest.mark.parametrize("partitions", [1, 4])
+def test_lazy_pipeline_matches_checkpointed(spark, tmp_path, split_column, partitions):
+    """The pinned lazy run and the parquet-checkpointed run of
+    normalize.yaml return the same data rows and the same codes table,
+    for both split conventions and at 1 and 4 shuffle partitions."""
+    import datetime as dt
+
+    from meds_transforms_spark.plans import Pipeline, PipelineConfig
+
+    def rows(df):
+        return sorted(map(tuple, df.collect()), key=repr)
+
+    data, splits = _write_normalize_input(spark, tmp_path / "in", split_column)
+    cfg = PipelineConfig.from_yaml(NORMALIZE_YAML)
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(partitions))
+    try:
+        lazy = Pipeline(spark, cfg).run(data, subject_splits=splits)
+        ckpt = Pipeline(spark, cfg, checkpoint_dir=str(tmp_path / "ckpt")).run(
+            data, subject_splits=splits
+        )
+        lazy_data, ckpt_data = rows(lazy[0]), rows(ckpt[0])
+        lazy_meta, ckpt_meta = rows(lazy[1]), rows(ckpt[1])
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    assert lazy_data == ckpt_data
+    assert lazy_meta == ckpt_meta
+    # the fixture exercises every stage: subjects filtered, the HR
+    # outlier occluded, codes indexed
+    assert 0 < len(lazy_data) < data.count()
+    assert [r[:2] for r in lazy_data if r[1] is not None and r[3] is None] == [
+        (3, dt.datetime(2020, 1, 4))
+    ]
+    assert len(lazy_meta) > 3
+
+
+def test_data_only_pipeline_places_no_pins(spark, tmp_path):
+    """Pins go only where a boundary has two consumers: a pipeline of
+    data stages alone (the curate-style text pipeline, or MEDS data
+    stages) composes into the same plan as calling the stages by hand."""
+    from meds_transforms_spark.operators.filter_subjects import filter_subjects
+    from meds_transforms_spark.plans import Pipeline, PipelineConfig
+    from meds_transforms_spark.plans.pipeline import _shared_boundaries
+
+    curate = PipelineConfig.from_yaml(
+        """
+stages:
+  - gopher_quality_filter: {min_words: 8, min_required_stopwords: 1}
+  - filter_rows: {matcher: {gopher_pass: true}}
+  - dedupe_doc_lines: {}
+  - dsir_weights: {target: "source = 'tgt'", n_buckets: 64}
+"""
+    )
+    assert _shared_boundaries(curate.stages) == set()
+
+    data, _ = _write_normalize_input(spark, tmp_path / "in", split_column=True)
+    cfg = PipelineConfig.from_yaml(
+        """
+stages:
+  - filter_subjects: {min_events_per_subject: 3}
+  - filter_subjects: {min_events_per_subject: 4}
+"""
+    )
+    out, _ = Pipeline(spark, cfg).run(data)
+    by_hand = filter_subjects(
+        filter_subjects(data, min_events_per_subject=3), min_events_per_subject=4
+    )
+    assert "LogicalRDD" not in {cls for cls, _ in plan_leaves(out)}
+    plan = out._jdf.queryExecution().optimizedPlan()
+    assert plan.sameResult(by_hand._jdf.queryExecution().optimizedPlan())
