@@ -49,8 +49,6 @@ the word-n-gram semantics mirror operators/dedup.word_ngrams_of
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -61,7 +59,8 @@ from meds_transforms_spark.operators.dedup import _normalized
 
 def _with_kernel_parallelism(base: DataFrame) -> DataFrame:
     """Rescue the Arrow kernel stage from SEVERELY starved input
-    partitioning (fewer splits than a quarter of the session's cores).
+    partitioning (fewer splits than a quarter of the size-aware task
+    target).
 
     ``mapInArrow`` inherits its input's partitioning, so a 1-2-split
     input caps the one CPU-bound stage of these operators at ~2 tasks
@@ -78,11 +77,11 @@ def _with_kernel_parallelism(base: DataFrame) -> DataFrame:
     (+30-80% wall: one more exchange, double-size Python worker pool,
     no CPU win), while the 1-split input's kernel critical path is
     ~20 s single-threaded that the repartition reclaims. Threshold
-    n·4 ≤ cores keeps exactly the rescue case. On a real cluster a
+    n·4 ≤ target keeps exactly the rescue case. On a real cluster a
     100 TB scan yields far more splits than cores, so the branch is
     dead there; streaming frames pass through untouched (no ``.rdd``
-    on a stream). ``SPARK_GRAFT_KERNEL_PARALLELISM=0`` disables, ``=N``
-    forces N partitions whenever the input has fewer.
+    on a stream). Callers that want no rescue pass the wrappers'
+    ``rescue_starved=False``.
 
     Probe cost (round-9 fix, ADVICE r08): the count must NOT come from
     ``.rdd`` on an exchange-containing plan — under AQE that
@@ -96,21 +95,18 @@ def _with_kernel_parallelism(base: DataFrame) -> DataFrame:
     unknown counts, ``.rdd`` ONLY when the optimized plan is pure
     scan/project/filter, where RDD conversion just computes file
     splits. A shuffle-rooted plan with unknown static count (e.g. an
-    AQE-coalescible aggregate feeding the kernel) skips the auto
-    rescue — set ``SPARK_GRAFT_KERNEL_PARALLELISM=N`` explicitly for
-    those. Explicit ``=N`` honors the same contract as auto: a
-    scan-rooted input is probed (job-free) and left alone when it
-    already has ≥ N splits; only shuffle-rooted inputs — where no
-    job-free count exists and which are the documented use-case for
-    the env — repartition unconditionally.
+    AQE-coalescible aggregate feeding the kernel) skips the rescue. A
+    caller that wants more kernel tasks there calls
+    ``df.repartition(n)`` before the operator: the repartition root
+    fixes the static count at n, which step (1) reads, and the kernel
+    runs n tasks.
 
     SIZE-AWARE target (round-11, guide §2 "make partitioning
-    scale-adaptive"): the rescue target is no longer a flat
-    ``defaultParallelism`` but ``min(cores, ceil(estimated input
-    bytes / SPARK_GRAFT_KERNEL_TASK_BYTES))`` using the optimized
-    logical plan's size estimate (job-free planner statistics — file
-    bytes for scans). A starved input only fans out to as many tasks
-    as carry ≥ ~4 MB of payload each: round-10's flat-cores rescue
+    scale-adaptive"): the rescue target is ``min(cores, ceil(estimated
+    input bytes / _KERNEL_TASK_BYTES))`` using the optimized logical
+    plan's size estimate (job-free planner statistics — file bytes for
+    scans). A starved input only fans out to as many tasks as carry
+    ≥ ~4 MB of payload each: round-10's flat-cores rescue
     round-robin-exchanged a 584 KB corpus into 32 partitions and spun
     the full Python worker pool for milliseconds of kernel compute —
     the driver-measured docs_minhash_dedup 0.53× regression and its
@@ -118,37 +114,11 @@ def _with_kernel_parallelism(base: DataFrame) -> DataFrame:
     minhash 2.32→1.09 s median, winnow_contains 4.74→3.28,
     winnow_overlap 3.31→2.65, substring_dedup 3.74→2.88, and 1-2
     fewer jobs/run each. Plans with unknown/absurd size estimates
-    (Long.Max defaults) clamp to cores, i.e. the old behavior; the
-    4× starvation gate now compares against the size-aware target, so
-    a tiny 1-split input is simply left alone.
+    (Long.Max defaults) clamp to cores; a tiny 1-split input is simply
+    left alone.
     """
     if base.isStreaming:
         return base
-    raw = os.environ.get("SPARK_GRAFT_KERNEL_PARALLELISM", "auto").strip().lower()
-    if raw in ("0", "off", "none", "false"):
-        return base
-    if raw != "auto":
-        try:
-            target = int(raw)
-        except ValueError:  # exported-but-garbage env: behave as auto
-            target = 0
-        if target > 0:
-            n = _static_partition_count(base)
-            if n is None and _is_scan_rooted(base):
-                # Plain scans report UnknownPartitioning; their real
-                # split count is job-free to read (ADVICE r09 medium —
-                # a 200-split scan with =32 set must NOT be coalesced).
-                try:
-                    n = base.rdd.getNumPartitions()
-                except Exception:
-                    n = None
-            if n is None or n < target:
-                # Unknown count on a shuffle-rooted plan: =N is the
-                # documented escape hatch for exactly that shape, so
-                # repartition unconditionally there.
-                return base.repartition(target)
-            return base
-        # unparseable / non-positive explicit value: fall back to auto
     cores = base.sparkSession.sparkContext.defaultParallelism
     target = min(cores, _size_aware_task_count(base, cores))
     n = _static_partition_count(base)
@@ -169,25 +139,18 @@ _KERNEL_TASK_BYTES = 4 << 20  # ≥ ~20 ms kernel compute per task
 
 def _size_aware_task_count(df: DataFrame, cores: int) -> int:
     """How many kernel tasks the input's SIZE justifies: ceil(estimated
-    bytes / task-bytes), read job-free from the optimized logical
+    bytes / ``_KERNEL_TASK_BYTES``), read job-free from the optimized logical
     plan's statistics (file size for scans, propagated through
     project/filter). Unknown or absurd estimates (Catalyst's Long.Max
     default for unsized relations) return ``cores`` — the pre-round-11
     flat target."""
-    raw = os.environ.get("SPARK_GRAFT_KERNEL_TASK_BYTES", "").strip()
-    try:
-        task_bytes = int(raw) if raw else _KERNEL_TASK_BYTES
-    except ValueError:
-        task_bytes = _KERNEL_TASK_BYTES
-    if task_bytes <= 0:
-        return cores
     try:
         est = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
     except Exception:
         return cores
     if est < 0 or est > (1 << 60):  # unknown / defaulted estimate
         return cores
-    return max(1, min(cores, -(-est // task_bytes)))
+    return max(1, min(cores, -(-est // _KERNEL_TASK_BYTES)))
 
 
 def _static_partition_count(df: DataFrame) -> int | None:
@@ -312,8 +275,7 @@ def _prefix(x: np.ndarray):
 # (all the n-sized temporaries below) — ~1.1 GB at the 16 MB
 # _MAX_SLICE_BYTES bound, the same transient footprint the unpooled
 # kernels already had, now simply kept warm. Workers that only ever see
-# small slices keep small pools. ``SPARK_GRAFT_KERNEL_SCRATCH=0``
-# disables pooling (every _scr call falls back to a fresh allocation).
+# small slices keep small pools.
 
 _SCRATCH: dict = {}
 
@@ -339,10 +301,6 @@ def _hugepage_empty(n: int, dtype) -> np.ndarray:
 def _scr(name: str, n: int, dtype) -> np.ndarray:
     """Length-``n`` view of the named per-worker reusable buffer
     (grow-only; contents UNDEFINED — callers must fully overwrite)."""
-    if os.environ.get("SPARK_GRAFT_KERNEL_SCRATCH", "1").strip().lower() in (
-        "0", "off", "false", "none",
-    ):
-        return np.empty(n, dtype=dtype)
     key = (name, np.dtype(dtype).str)
     buf = _SCRATCH.get(key)
     if buf is None or buf.shape[0] < n:
@@ -440,15 +398,16 @@ def _dedup_per_doc(doc_idx: np.ndarray, fps: np.ndarray):
     return di[keep], fp[keep]
 
 
-def _batch_slices(rb, max_bytes: int):
-    """Split a record batch into row slices whose text payload is
-    bounded, so the numpy working set stays O(max_bytes)."""
+def _batch_slices(rb, max_bytes: int, text_idx: int = 1):
+    """Split a record batch into row slices whose text payload (column
+    ``text_idx``) is bounded, so the numpy working set stays
+    O(max_bytes)."""
     import pyarrow.compute as pc
 
     n = rb.num_rows
     if n == 0:
         return
-    sizes = pc.binary_length(rb.column(1)).to_numpy(zero_copy_only=False)
+    sizes = pc.binary_length(rb.column(text_idx)).to_numpy(zero_copy_only=False)
     sizes = np.nan_to_num(sizes.astype(np.float64), nan=0.0).astype(np.int64)
     cum = np.cumsum(sizes)
     lo = 0
@@ -458,6 +417,55 @@ def _batch_slices(rb, max_bytes: int):
         hi = min(hi, n)
         yield rb.slice(lo, hi - lo)
         lo = hi
+
+
+def _map_text_kernel(
+    df: DataFrame,
+    text_col: str,
+    passthrough: tuple[str, ...],
+    out_fields: tuple[str, ...],
+    kernel,
+    rescue_starved: bool,
+) -> DataFrame:
+    """The one ``mapInArrow`` boundary of the gram operators: NULL text
+    is dropped, the rest normalized (whole-stage codegen, before the
+    Python stage) and projected next to ``passthrough``; each Arrow
+    batch is cut by :func:`_batch_slices` and ``kernel(text_slice)``
+    returns ``(doc_positions, *columns)`` of 64-bit integer arrays. The
+    passthrough columns are taken at the slice-local doc positions and
+    every kernel column leaves as a LongType ``out_fields`` column
+    (uint64 hashes as their int64 bit pattern).
+
+    The slice bound is read here, at plan time, so a ``_MAX_SLICE_BYTES``
+    set before the plan is built reaches the Python workers."""
+    import pyarrow as pa
+    from pyspark.sql import types as T
+
+    out_schema = T.StructType(
+        [T.StructField(c, df.select(c).schema[0].dataType) for c in passthrough]
+        + [T.StructField(c, T.LongType()) for c in out_fields]
+    )
+    names = [*passthrough, *out_fields]
+    base = df.filter(F.col(text_col).isNotNull()).select(
+        *[F.col(c) for c in passthrough], _normalized(F.col(text_col)).alias("__txt")
+    )
+    npass = len(passthrough)
+    max_bytes = _MAX_SLICE_BYTES
+
+    def fn(batches):
+        for rb in batches:
+            for sl in _batch_slices(rb, max_bytes, npass):
+                doc_pos, *cols = kernel(sl.column(npass))
+                take = pa.array(doc_pos)
+                yield pa.RecordBatch.from_arrays(
+                    [sl.column(i).take(take) for i in range(npass)]
+                    + [pa.array(c.view(np.int64)) for c in cols],
+                    names=names,
+                )
+
+    if rescue_starved:
+        base = _with_kernel_parallelism(base)
+    return base.mapInArrow(fn, schema=out_schema)
 
 
 def _winnow_batch(ids_arr, txt_arr, k: int, w: int):
@@ -568,36 +576,12 @@ def winnow_fingerprints_poly(
     """
     if k < 1 or w < 1:
         raise ValueError("winnow_fingerprints_poly: k and w must be >= 1")
-    import pyarrow as pa
-
-    from pyspark.sql import types as T
-
-    id_type = df.select(id_col).schema[0].dataType
-    out_schema = T.StructType(
-        [T.StructField(id_col, id_type), T.StructField("fp", T.LongType())]
+    return _map_text_kernel(
+        df, text_col, (id_col,), ("fp",),
+        # _winnow_batch does not read its ids argument
+        lambda txt: _winnow_batch(None, txt, k, w),
+        rescue_starved,
     )
-    base = df.filter(F.col(text_col).isNotNull()).select(
-        F.col(id_col), _normalized(F.col(text_col)).alias("__txt")
-    )
-
-    def fn(batches):
-        for rb in batches:
-            for sl in _batch_slices(rb, _MAX_SLICE_BYTES):
-                doc_pos, fps = _winnow_batch(sl.column(0), sl.column(1), k, w)
-                ids = sl.column(0)
-                if isinstance(ids, pa.ChunkedArray):
-                    ids = ids.combine_chunks()
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        ids.take(pa.array(doc_pos)),
-                        pa.array(fps.view(np.int64)),
-                    ],
-                    names=[id_col, "fp"],
-                )
-
-    if rescue_starved:
-        base = _with_kernel_parallelism(base)
-    return base.mapInArrow(fn, schema=out_schema)
 
 
 def _token_bounds(txt_arr):
@@ -704,36 +688,11 @@ def word_ngram_hashes_poly(
     funnel a small frame into few partitions (e.g. decontaminate's eval
     side, where one Python task over a few thousand benchmark docs
     beats 32 dispatches of ~2 docs each)."""
-    import pyarrow as pa
-
-    from pyspark.sql import types as T
-
-    id_type = df.select(id_col).schema[0].dataType
-    out_schema = T.StructType(
-        [T.StructField(id_col, id_type), T.StructField(out_col, T.LongType())]
+    return _map_text_kernel(
+        df, text_col, (id_col,), (out_col,),
+        lambda txt: _word_gram_batch(txt, n),
+        rescue_starved,
     )
-    base = df.filter(F.col(text_col).isNotNull()).select(
-        F.col(id_col), _normalized(F.col(text_col)).alias("__txt")
-    )
-
-    def fn(batches):
-        for rb in batches:
-            for sl in _batch_slices(rb, _MAX_SLICE_BYTES):
-                doc_pos, fps = _word_gram_batch(sl.column(1), n)
-                ids = sl.column(0)
-                if isinstance(ids, pa.ChunkedArray):
-                    ids = ids.combine_chunks()
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        ids.take(pa.array(doc_pos)),
-                        pa.array(fps.view(np.int64)),
-                    ],
-                    names=[id_col, out_col],
-                )
-
-    if rescue_starved:
-        base = _with_kernel_parallelism(base)
-    return base.mapInArrow(fn, schema=out_schema)
 
 
 def _minhash_batch(txt_arr, k: int, num_hashes: int, bands: int):
@@ -864,38 +823,11 @@ def lsh_band_buckets_poly(
     """
     if num_hashes % bands != 0:
         raise ValueError("num_hashes must be divisible by bands")
-    import pyarrow as pa
-
-    from pyspark.sql import types as T
-
-    id_type = df.select(id_col).schema[0].dataType
-    out_schema = T.StructType(
-        [T.StructField(id_col, id_type), T.StructField("__bucket", T.LongType())]
+    return _map_text_kernel(
+        df, text_col, (id_col,), ("__bucket",),
+        lambda txt: _minhash_batch(txt, shingle_k, num_hashes, bands),
+        rescue_starved,
     )
-    base = df.filter(F.col(text_col).isNotNull()).select(
-        F.col(id_col), _normalized(F.col(text_col)).alias("__txt")
-    )
-
-    def fn(batches):
-        for rb in batches:
-            for sl_ in _batch_slices(rb, _MAX_SLICE_BYTES):
-                doc_pos, buckets = _minhash_batch(
-                    sl_.column(1), shingle_k, num_hashes, bands
-                )
-                ids = sl_.column(0)
-                if isinstance(ids, pa.ChunkedArray):
-                    ids = ids.combine_chunks()
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        ids.take(pa.array(doc_pos)),
-                        pa.array(buckets.view(np.int64)),
-                    ],
-                    names=[id_col, "__bucket"],
-                )
-
-    if rescue_starved:
-        base = _with_kernel_parallelism(base)
-    return base.mapInArrow(fn, schema=out_schema)
 
 
 def _bigram_counts_batch(txt_arr):
@@ -951,43 +883,11 @@ def bigram_hash_counts_poly(
     matches ``_tokens(lower(text))`` exactly (whitespace split, empty
     tokens dropped — normalization cannot change the token sequence).
     """
-    import pyarrow as pa
-
-    from pyspark.sql import types as T
-
-    id_type = df.select(id_col).schema[0].dataType
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, id_type),
-            T.StructField("w1", T.LongType()),
-            T.StructField("w2", T.LongType()),
-            T.StructField("__n_local", T.LongType()),
-        ]
+    return _map_text_kernel(
+        df, text_col, (id_col,), ("w1", "w2", "__n_local"),
+        _bigram_counts_batch,
+        rescue_starved,
     )
-    base = df.filter(F.col(text_col).isNotNull()).select(
-        F.col(id_col), _normalized(F.col(text_col)).alias("__txt")
-    )
-
-    def fn(batches):
-        for rb in batches:
-            for sl_ in _batch_slices(rb, _MAX_SLICE_BYTES):
-                doc_pos, h1, h2, counts = _bigram_counts_batch(sl_.column(1))
-                ids = sl_.column(0)
-                if isinstance(ids, pa.ChunkedArray):
-                    ids = ids.combine_chunks()
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        ids.take(pa.array(doc_pos)),
-                        pa.array(h1.view(np.int64)),
-                        pa.array(h2.view(np.int64)),
-                        pa.array(counts.astype(np.int64)),
-                    ],
-                    names=[id_col, "w1", "w2", "__n_local"],
-                )
-
-    if rescue_starved:
-        base = _with_kernel_parallelism(base)
-    return base.mapInArrow(fn, schema=out_schema)
 
 
 def _feature_bucket_counts_batch(txt_arr, n_buckets: int, use_bigrams: bool):
@@ -1048,57 +948,8 @@ def word_feature_bucket_counts_poly(
     features the space-joined adjacent pairs (docs with <2 tokens emit
     no bigrams — dsir._features parity). Token-less/NULL docs emit no
     rows (they score 0.0 via the callers' left join)."""
-    import pyarrow as pa
-
-    from pyspark.sql import types as T
-
-    fields = [
-        T.StructField(c, df.select(c).schema[0].dataType) for c in passthrough
-    ]
-    out_schema = T.StructType(
-        fields
-        + [T.StructField("__b", T.LongType()), T.StructField("__n", T.LongType())]
+    return _map_text_kernel(
+        df, text_col, passthrough, ("__b", "__n"),
+        lambda txt: _feature_bucket_counts_batch(txt, n_buckets, use_bigrams),
+        rescue_starved,
     )
-    base = df.filter(F.col(text_col).isNotNull()).select(
-        *[F.col(c) for c in passthrough],
-        _normalized(F.col(text_col)).alias("__txt"),
-    )
-    npass = len(passthrough)
-
-    def fn(batches):
-        for rb in batches:
-            # text is the LAST column here; _batch_slices sizes column 1,
-            # so re-point it at the text column index
-            import pyarrow.compute as pc
-
-            sizes = pc.binary_length(rb.column(npass)).to_numpy(
-                zero_copy_only=False
-            )
-            sizes = np.nan_to_num(sizes.astype(np.float64), nan=0.0).astype(np.int64)
-            cum = np.cumsum(sizes) if len(sizes) else np.empty(0, dtype=np.int64)
-            lo = 0
-            while lo < rb.num_rows:
-                hi = int(
-                    np.searchsorted(cum, (cum[lo - 1] if lo else 0) + _MAX_SLICE_BYTES)
-                ) + 1
-                hi = min(max(hi, lo + 1), rb.num_rows)
-                sl_ = rb.slice(lo, hi - lo)
-                lo = hi
-                doc_pos, buckets, counts = _feature_bucket_counts_batch(
-                    sl_.column(npass), n_buckets, use_bigrams
-                )
-                take = pa.array(doc_pos)
-                cols = []
-                for i in range(npass):
-                    c = sl_.column(i)
-                    if isinstance(c, pa.ChunkedArray):
-                        c = c.combine_chunks()
-                    cols.append(c.take(take))
-                yield pa.RecordBatch.from_arrays(
-                    cols + [pa.array(buckets), pa.array(counts.astype(np.int64))],
-                    names=[f.name for f in out_schema.fields],
-                )
-
-    if rescue_starved:
-        base = _with_kernel_parallelism(base)
-    return base.mapInArrow(fn, schema=out_schema)

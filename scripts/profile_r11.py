@@ -6,7 +6,6 @@ Usage:
   python scripts/profile_r11.py q <name> [...]           # time queries
   python scripts/profile_r11.py plan <name> [...]        # dump plans
   python scripts/profile_r11.py ab ENV KEY=A KEY=B -- <name> [...]
-        # e.g. ab SPARK_GRAFT_KERNEL_PARALLELISM auto=auto off=0 -- docs_minhash_dedup
 Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_RUNS (default 5),
      SPARK_GRAFT_CPUS (default all).
 """

@@ -17,8 +17,8 @@ VERDICT r09 items 2, 4, 5, 7. Subcommands (paste into SCALING.md):
    deliberately skips, measured: a kernel whose input is a SHUFFLE
    (exact_dedup survivors → winnow_fingerprints). Auto mode declines
    the rescue there (the probe cannot count an AQE-coalescible
-   exchange without running jobs); A/B the pipeline with
-   SPARK_GRAFT_KERNEL_PARALLELISM unset vs =32.
+   exchange without running jobs); A/B the pipeline as is vs with a
+   caller-side ``repartition(32)`` before the kernel.
 
 3. ``components N_NODES CHAIN_LEN`` — cross-executor connected
    components with loop telemetry (iterations, loop partitions,
@@ -119,10 +119,11 @@ def cmd_family1(rep: int, runs: int):
 
 def cmd_kparallel(rep: int, runs: int):
     """A/B: kernel consuming a SHUFFLE-rooted input (exact_dedup
-    survivors -> winnow_fingerprints), env unset vs =32. The auto probe
-    declines the rescue on this shape by design (grams.py:
-    _with_kernel_parallelism — counting an AQE-coalescible exchange is
-    not job-free); this measures what the explicit escape hatch buys."""
+    survivors -> winnow_fingerprints), as is vs repartition(32) first.
+    The auto probe declines the rescue on this shape by design
+    (grams.py: _with_kernel_parallelism — counting an AQE-coalescible
+    exchange is not job-free); this measures what the caller-side
+    repartition buys."""
     from meds_transforms_spark.operators.dedup import exact_dedup
     from meds_transforms_spark.operators.winnow import winnow_fingerprints
 
@@ -135,27 +136,23 @@ def cmd_kparallel(rep: int, runs: int):
     docs = spark.read.parquet(os.path.join(sf, "documents.parquet"))
     print(f"=== kparallel: {docs.count()} docs (REP={rep}) ===", flush=True)
 
-    def pipeline():
+    def pipeline(n_parts):
         survivors = exact_dedup(docs)  # window over content hash: shuffle-rooted
+        if n_parts:
+            survivors = survivors.repartition(n_parts)
         fps = winnow_fingerprints(survivors, k=10, w=8, hash_fn="poly64")
         (fps.groupBy().agg(F.count(F.lit(1)).alias("n"),
                            F.expr("bit_xor(fp)").alias("x"))
          .write.format("noop").mode("overwrite").save())
 
-    for env in (None, "32"):
-        if env is None:
-            os.environ.pop("SPARK_GRAFT_KERNEL_PARALLELISM", None)
-            label = "kparallel[auto: no rescue]"
-        else:
-            os.environ["SPARK_GRAFT_KERNEL_PARALLELISM"] = env
-            label = f"kparallel[env={env}]"
+    for n_parts in (None, 32):
+        label = f"kparallel[repartition({n_parts})]" if n_parts else "kparallel[as is]"
         try:
-            pipeline()  # warm
-            timed(spark, label, pipeline, runs=runs)
+            pipeline(n_parts)  # warm
+            timed(spark, label, lambda: pipeline(n_parts), runs=runs)
         except Exception as e:
             print(f"{label} FAILED: {type(e).__name__}: {str(e)[:200]}",
                   flush=True)
-    os.environ.pop("SPARK_GRAFT_KERNEL_PARALLELISM", None)
     spark.stop()
 
 

@@ -4,8 +4,8 @@ its regression guard.
 VERDICT r08 items 1 and 6. Subcommands (paste results into SCALING.md):
 
 1. ``bigdoc_passes`` — pass-over-pass wall of the winnow/minhash
-   kernels on the ~40 MB bigdoc batch (the q_docs_bigdoc_* fixture),
-   scratch pool ON vs OFF. This is the regression guard for the
+   kernels on the ~40 MB bigdoc batch (the q_docs_bigdoc_* fixture)
+   over the scratch pool. This is the regression guard for the
    round-8 "sporadic rising-cost mapInArrow" anomaly, whose root cause
    round 9 identified as allocator churn: every numpy temporary above
    glibc's dynamic mmap threshold (<= 32 MB) is mmap'd and munmap'd
@@ -57,39 +57,35 @@ def cmd_bigdoc_passes(runs: int):
 
     rb, total = _bigdoc_record_batch(SF_DIR)
     print(f"bigdoc batch: {rb.num_rows} docs, {total / 2**20:.1f} MB")
-    for pool in ("1", "0"):
-        os.environ["SPARK_GRAFT_KERNEL_SCRATCH"] = pool
-        G._SCRATCH.clear()
-        walls = {"winnow": [], "minhash": []}
-        for p in range(runs):
-            t0 = time.time()
-            for sl in G._batch_slices(rb, G._MAX_SLICE_BYTES):
-                G._winnow_batch(sl.column(0), sl.column(1), 10, 8)
-            walls["winnow"].append(time.time() - t0)
-            t0 = time.time()
-            for sl in G._batch_slices(rb, G._MAX_SLICE_BYTES):
-                G._minhash_batch(sl.column(1), 5, 32, 8)
-            walls["minhash"].append(time.time() - t0)
+    G._SCRATCH.clear()
+    walls = {"winnow": [], "minhash": []}
+    for p in range(runs):
+        t0 = time.time()
+        for sl in G._batch_slices(rb, G._MAX_SLICE_BYTES):
+            G._winnow_batch(sl.column(0), sl.column(1), 10, 8)
+        walls["winnow"].append(time.time() - t0)
+        t0 = time.time()
+        for sl in G._batch_slices(rb, G._MAX_SLICE_BYTES):
+            G._minhash_batch(sl.column(1), 5, 32, 8)
+        walls["minhash"].append(time.time() - t0)
+    for op, ws in walls.items():
+        print(f"{op:<8} passes: {[round(w, 2) for w in ws]}"
+              f"  steady {total / 2**20 / statistics.median(ws[1:]):.0f} MB/s")
+    if runs >= 3:
+        # Guard on UNROUNDED walls with a floored reference
+        # (ADVICE r09: a 0.0-rounded fast pass made any nonzero
+        # steady fail 2.5×min), referenced to the median of the
+        # first 3 passes rather than the single fastest (VERDICT
+        # r09 item 3: min-of-all flaps on one lucky pass).
         for op, ws in walls.items():
-            print(f"pool={pool} {op:<8} passes: {[round(w, 2) for w in ws]}"
-                  f"  steady {total / 2**20 / statistics.median(ws[1:]):.0f} MB/s")
-        if pool == "1" and runs >= 3:
-            # Guard on UNROUNDED walls with a floored reference
-            # (ADVICE r09: a 0.0-rounded fast pass made any nonzero
-            # steady fail 2.5×min), referenced to the median of the
-            # first 3 passes rather than the single fastest (VERDICT
-            # r09 item 3: min-of-all flaps on one lucky pass).
-            for op, ws in walls.items():
-                steady = statistics.median(ws[1:])
-                ref = max(statistics.median(ws[:3]), 0.05)
-                assert steady <= 2.5 * ref, (
-                    f"{op}: rising-cost regression — passes "
-                    f"{[round(w, 3) for w in ws]} (steady {steady:.3f}s "
-                    f"> 2.5 x ref {ref:.3f}s)"
-                )
-            print("pool=1 pass-over-pass guard: OK "
-                  "(steady <= 2.5x median-of-first-3)")
-    os.environ.pop("SPARK_GRAFT_KERNEL_SCRATCH", None)
+            steady = statistics.median(ws[1:])
+            ref = max(statistics.median(ws[:3]), 0.05)
+            assert steady <= 2.5 * ref, (
+                f"{op}: rising-cost regression — passes "
+                f"{[round(w, 3) for w in ws]} (steady {steady:.3f}s "
+                f"> 2.5 x ref {ref:.3f}s)"
+            )
+        print("pass-over-pass guard: OK (steady <= 2.5x median-of-first-3)")
 
 
 def cmd_bigdoc_spark(runs: int):

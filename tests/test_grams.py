@@ -238,19 +238,22 @@ def test_jaccard_pairs_arrow_matches_expr(spark):
     assert a == e and a
 
 
-def test_kernel_parallelism_rescues_starved_input(spark):
+def test_kernel_parallelism_rescues_starved_input(spark, monkeypatch, tmp_path):
     """_with_kernel_parallelism repartitions only SEVERELY starved
-    inputs (n_parts·4 <= target), leaves healthy scans untouched, and
-    honors the off/forced env modes — the round-8 policy measured at
-    500k docs (repartitioning a 15-split input was a consistent loss;
-    a 1-split input's single-threaded kernel is the rescue case).
-    Round-11: the target is SIZE-AWARE (ceil(estimated bytes /
-    SPARK_GRAFT_KERNEL_TASK_BYTES), capped at cores), so a tiny
-    starved input is left alone instead of fanning out the whole
-    Python worker pool for milliseconds of kernel compute."""
-    import os
+    inputs (n_parts·4 <= target) and leaves healthy scans untouched —
+    the round-8 policy measured at 500k docs (repartitioning a
+    15-split input was a consistent loss; a 1-split input's
+    single-threaded kernel is the rescue case). Round-11: the target is
+    SIZE-AWARE (ceil(estimated bytes / _KERNEL_TASK_BYTES), capped at
+    cores), so a tiny starved input is left alone instead of fanning
+    out the whole Python worker pool for milliseconds of kernel
+    compute. The probe runs in the calling process at planning time, so
+    a patched _KERNEL_TASK_BYTES reaches it."""
+    from pyspark.sql import functions as F
 
+    from meds_transforms_spark.operators import grams
     from meds_transforms_spark.operators.grams import (
+        _static_partition_count,
         _with_kernel_parallelism,
         winnow_fingerprints_poly,
     )
@@ -262,76 +265,58 @@ def test_kernel_parallelism_rescues_starved_input(spark):
     )
     starved = docs.repartition(1)
     healthy = docs.repartition(cores)
-    old = os.environ.get("SPARK_GRAFT_KERNEL_PARALLELISM")
-    old_tb = os.environ.get("SPARK_GRAFT_KERNEL_TASK_BYTES")
-    try:
-        # Default task-bytes (4 MB): a KB-sized SIZED input (parquet
-        # scan — planner stats know file bytes) justifies ONE task —
-        # no rescue, regardless of starvation. The python-local frame
-        # has UNKNOWN stats (Long.Max) and keeps the old flat-cores
-        # behavior below.
-        os.environ["SPARK_GRAFT_KERNEL_PARALLELISM"] = "auto"
-        os.environ.pop("SPARK_GRAFT_KERNEL_TASK_BYTES", None)
-        import tempfile
 
-        with tempfile.TemporaryDirectory() as tmp:
-            pq = f"{tmp}/tiny.parquet"
-            docs.coalesce(1).write.parquet(pq)
-            tiny_scan = spark.read.parquet(pq)
-            assert tiny_scan.rdd.getNumPartitions() < cores  # starved
-            assert (
-                _with_kernel_parallelism(tiny_scan).rdd.getNumPartitions()
-                == tiny_scan.rdd.getNumPartitions()
-            )
-            # size target between n and cores: rescue lands ON the
-            # size target (bytes-justified tasks), not on flat cores.
-            est = int(
-                tiny_scan._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-            )
-            if cores >= 8 and est >= 8:
-                os.environ["SPARK_GRAFT_KERNEL_TASK_BYTES"] = str(
-                    -(-est // (cores // 2))
-                )
-                got = _with_kernel_parallelism(tiny_scan).rdd.getNumPartitions()
-                assert 4 <= got <= cores // 2, got
-        # 1 byte/task => size target == cores: the pre-round-11 policy.
-        os.environ["SPARK_GRAFT_KERNEL_TASK_BYTES"] = "1"
-        assert _with_kernel_parallelism(starved).rdd.getNumPartitions() == cores
-        assert _with_kernel_parallelism(healthy).rdd.getNumPartitions() == cores
-        # a moderately-split input (half of cores) is NOT rescued
-        if cores >= 4:
-            mid = docs.repartition(cores // 2)
-            assert (
-                _with_kernel_parallelism(mid).rdd.getNumPartitions() == cores // 2
-            )
-        os.environ["SPARK_GRAFT_KERNEL_TASK_BYTES"] = "1"
-        os.environ["SPARK_GRAFT_KERNEL_PARALLELISM"] = "0"
-        assert _with_kernel_parallelism(starved).rdd.getNumPartitions() == 1
-        os.environ["SPARK_GRAFT_KERNEL_PARALLELISM"] = "7"
-        assert _with_kernel_parallelism(starved).rdd.getNumPartitions() == 7
-        # results are partitioning-invariant through the rescue path
-        os.environ["SPARK_GRAFT_KERNEL_PARALLELISM"] = "auto"
-        a = {(r.doc_id, r.fp) for r in winnow_fingerprints_poly(starved).collect()}
-        os.environ["SPARK_GRAFT_KERNEL_PARALLELISM"] = "0"
-        b = {(r.doc_id, r.fp) for r in winnow_fingerprints_poly(starved).collect()}
-        assert a == b and a
-    finally:
-        for key, val in (
-            ("SPARK_GRAFT_KERNEL_PARALLELISM", old),
-            ("SPARK_GRAFT_KERNEL_TASK_BYTES", old_tb),
-        ):
-            if val is None:
-                os.environ.pop(key, None)
-            else:
-                os.environ[key] = val
+    # Default task-bytes (4 MB): a KB-sized SIZED input (parquet scan —
+    # planner stats know file bytes) justifies ONE task — no rescue,
+    # regardless of starvation. The python-local frame has UNKNOWN
+    # stats (Long.Max) and keeps the flat-cores behavior below.
+    pq = str(tmp_path / "tiny.parquet")
+    docs.coalesce(1).write.parquet(pq)
+    tiny_scan = spark.read.parquet(pq)
+    assert tiny_scan.rdd.getNumPartitions() < cores  # starved
+    assert (
+        _with_kernel_parallelism(tiny_scan).rdd.getNumPartitions()
+        == tiny_scan.rdd.getNumPartitions()
+    )
+    # size target between n and cores: rescue lands ON the size target
+    # (bytes-justified tasks), not on flat cores.
+    est = int(tiny_scan._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    if cores >= 8 and est >= 8:
+        monkeypatch.setattr(grams, "_KERNEL_TASK_BYTES", -(-est // (cores // 2)))
+        got = _with_kernel_parallelism(tiny_scan).rdd.getNumPartitions()
+        assert 4 <= got <= cores // 2, got
+
+    # 1 byte/task => size target == cores: the pre-round-11 policy.
+    monkeypatch.setattr(grams, "_KERNEL_TASK_BYTES", 1)
+    assert _with_kernel_parallelism(starved).rdd.getNumPartitions() == cores
+    assert _with_kernel_parallelism(healthy).rdd.getNumPartitions() == cores
+    # a moderately-split input (half of cores) is NOT rescued
+    if cores >= 4:
+        mid = docs.repartition(cores // 2)
+        assert _with_kernel_parallelism(mid).rdd.getNumPartitions() == cores // 2
+
+    # A shuffle-rooted input has no job-free count and is left alone; a
+    # caller-side repartition(n) fixes the static count the probe reads.
+    agg = docs.groupBy("doc_id").agg(F.first("text").alias("text"))
+    assert _static_partition_count(agg) is None
+    assert _with_kernel_parallelism(agg) is agg
+    assert _static_partition_count(agg.repartition(7)) == 7
+
+    # rescue_starved=False is the no-rescue arm; results are
+    # partitioning-invariant through the rescue path
+    rescued = winnow_fingerprints_poly(starved)
+    kept = winnow_fingerprints_poly(starved, rescue_starved=False)
+    assert _static_partition_count(rescued) == cores
+    assert _static_partition_count(kept) == 1
+    a = {(r.doc_id, r.fp) for r in rescued.collect()}
+    b = {(r.doc_id, r.fp) for r in kept.collect()}
+    assert a == b and a
 
 
 def test_default_hash_fn_is_poly64_kernel(spark):
     """Round-8 default flip: minhash_lsh_dedup / winnow_fingerprints /
     lsh_band_buckets with NO hash_fn argument route to the Arrow poly64
-    kernel (identical results to the explicit form; the one-shot
-    behavior-change notice is pre-absorbed by conftest's autouse
-    fixture)."""
+    kernel (identical results to the explicit form)."""
     from meds_transforms_spark.operators.dedup import (
         lsh_band_buckets,
         minhash_lsh_dedup,
@@ -391,38 +376,58 @@ def test_flat_utf8_rebases_sliced_buffers():
         assert np.array_equal(a, b)
 
 
-def test_poly64_default_warns_once_per_session(spark):
-    """CHANGELOG round 10: taking the DEFAULT hash_fn fires exactly one
-    UserWarning per session; explicit hash_fn (even 'poly64') never
-    warns."""
-    import warnings as W
+@pytest.mark.parametrize(
+    "wrapper", ["winnow", "wordgram", "minhash", "bigram", "feature_buckets"]
+)
+def test_wrapper_output_invariant_to_slice_bound(spark, monkeypatch, wrapper):
+    """Each public gram wrapper gives the same rows at the default
+    _MAX_SLICE_BYTES as at a bound that cuts every Arrow batch into
+    many slices: slice-local doc positions must map back through the
+    passthrough columns (string ids; two columns for the feature-bucket
+    wrapper). A counting _batch_slices shows that the bound patched
+    before planning reached the Python workers and really produced the
+    extra slices."""
+    from meds_transforms_spark.operators import grams as G
 
-    from meds_transforms_spark.operators import dedup as D
-    from meds_transforms_spark.operators.winnow import winnow_fingerprints
-
+    rows = [
+        (f"d{i:03d}", i % 3, "  ".join(f"W{(i * j) % 17}" for j in range(3 + i % 11)))
+        for i in range(60)
+    ]
     docs = spark.createDataFrame(
-        [(1, "alpha beta gamma delta"), (2, "alpha beta gamma delta")],
-        "doc_id long, text string",
-    )
-    orig = D._default_hash_fn_warned
-    try:
-        # explicit hash_fn — silent even from a fresh session state
-        D._default_hash_fn_warned = False
-        with W.catch_warnings(record=True) as rec:
-            W.simplefilter("always")
-            D.minhash_lsh_dedup(docs, hash_fn="poly64").collect()
-        assert [w for w in rec if "hash_fn" in str(w.message)] == []
-        assert not D._default_hash_fn_warned
+        rows + [("dnull", 0, None), ("dempty", 1, "")],
+        "doc_id string, __t int, text string",
+    ).repartition(2)
+    run = {
+        "winnow": lambda d: G.winnow_fingerprints_poly(d, k=4, w=3),
+        "wordgram": lambda d: G.word_ngram_hashes_poly(d, n=3),
+        "minhash": lambda d: G.lsh_band_buckets_poly(d),
+        "bigram": lambda d: G.bigram_hash_counts_poly(d),
+        "feature_buckets": lambda d: G.word_feature_bucket_counts_poly(
+            d, 64, passthrough=("doc_id", "__t")
+        ),
+    }[wrapper]
 
-        # default — exactly one warning, across DIFFERENT entry points
-        with W.catch_warnings(record=True) as rec:
-            W.simplefilter("always")
-            D.minhash_lsh_dedup(docs).collect()
-            winnow_fingerprints(docs, k=3, w=2).collect()
-            D.lsh_band_buckets(docs).collect()
-        hits = [w for w in rec if "hash_fn" in str(w.message)]
-        assert len(hits) == 1, [str(w.message) for w in rec]
-        assert issubclass(hits[0].category, UserWarning)
-        assert D._default_hash_fn_warned
-    finally:
-        D._default_hash_fn_warned = orig
+    real = G._batch_slices
+    counts = []
+
+    def collect_counting():
+        acc = spark.sparkContext.accumulator(0)
+
+        def counting(rb, max_bytes, text_idx=1):
+            for sl in real(rb, max_bytes, text_idx):
+                acc.add(1)
+                yield sl
+
+        monkeypatch.setattr(G, "_batch_slices", counting)
+        out = sorted(tuple(r) for r in run(docs).collect())
+        counts.append(acc.value)
+        return out
+
+    whole = collect_counting()
+    monkeypatch.setattr(G, "_MAX_SLICE_BYTES", 64)
+    sliced = collect_counting()
+    assert sliced == whole and whole
+    # two input partitions: at most one slice per batch at the default
+    # bound, several per batch at the small one
+    assert 0 < counts[0] <= 2, counts
+    assert counts[1] >= 5 * counts[0], counts
